@@ -2023,9 +2023,20 @@ object SparkEntry {
     */
   private def withStreamShuffle[A](s: SparkSession)(body: => A): A = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val n = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "2")
-    s.conf.set("spark.sql.shuffle.partitions", n)
+    s.conf.set("spark.sql.shuffle.partitions",
+      streamShuffle(sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")).toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** The stream family's shuffle width: `SPARK_GRAFT_STREAM_SHUFFLE`
+    * when set, else 2; a bad value fails at once instead of inside
+    * Spark's conf parsing mid-query.
+    */
+  private[graft] def streamShuffle(env: Option[String]): Int = {
+    val n = env.getOrElse("2")
+    require(n.toIntOption.exists(_ >= 1),
+      s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got '$n'")
+    n.toInt
   }
 
   /** Drain a bounded streaming query into a memory sink and return the

@@ -174,12 +174,14 @@ case class TopKMergeAgg(sketch: Expression, k: Int,
       StructField("id", LongType, nullable = false))),
     containsNull = false)
 
+  // update() reads every element's struct unchecked, so null elements
+  // are rejected at analysis (top_k_agg output never contains any)
   override def checkInputDataTypes(): TypeCheckResult = sketch.dataType match {
     case ArrayType(StructType(Array(
-      StructField(_, DoubleType, _, _), StructField(_, LongType, _, _))), _) =>
+      StructField(_, DoubleType, _, _), StructField(_, LongType, _, _))), false) =>
       TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"top_k_merge_agg expects array<struct<double, bigint>>, got $other")
+      s"top_k_merge_agg expects array<struct<double, bigint>> without null elements, got $other")
   }
 
   override def createAggregationBuffer(): TopKState = new TopKState(k)

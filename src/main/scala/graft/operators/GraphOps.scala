@@ -1253,8 +1253,9 @@ object GraphOps {
       .join(e.as("g"), col("f.v") === col("g.u"))
       .select(col("f.s").as("s"), col("g.v").as("v"))
       .filter(col("v") =!= col("s"))
+    // a self-loop pair (s, s) never puts the seed in its own ball
     val f1 = settle(seeds.join(e, col("s") === col("u"))
-      .select(col("s"), col("v")), Nil)
+      .select(col("s"), col("v")).filter(col("v") =!= col("s")), Nil)
     val f2 = settle(hop(f1), Seq(f1))
     val f3 = settle(hop(f2), Seq(f1, f2))
     def sizes(frontier: DataFrame, name: String) =

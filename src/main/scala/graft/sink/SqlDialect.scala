@@ -19,21 +19,6 @@ trait SqlDialect {
     */
   def createStagingSql(staging: String, dest: String): String
 
-  /** Staging DDL for parallel (multi-connection) loading: the table
-    * MUST be visible from connections other than the creator's, or
-    * executor-side inserts fail with "relation does not exist".
-    * Dialects whose only staging form is session-local must override
-    * [[supportsParallelStaging]] to false instead.
-    */
-  def createSharedStagingSql(staging: String, dest: String): String =
-    createStagingSql(staging, dest)
-
-  /** Whether [[createSharedStagingSql]] really yields a cross-session
-    * visible table; `IncrementalSync.syncTable` fails fast on
-    * `parallelStaging` configs when this is false.
-    */
-  def supportsParallelStaging: Boolean = true
-
   /** Upsert-merge J1: last-write-wins merge of staging into dest on the
     * PK, optionally skipping soft-deleted rows on the insert path
     * (`query_poll_table.py:119-137`).
@@ -74,13 +59,6 @@ final class PgDialect(quoteNames: Boolean = true) extends SqlDialect {
 
   override def createStagingSql(staging: String, dest: String): String =
     s"CREATE TEMPORARY TABLE $staging (LIKE $dest INCLUDING DEFAULTS)"
-
-  /** TEMPORARY tables are session-local in PostgreSQL; parallel
-    * staging needs a real (but WAL-skipping, crash-disposable)
-    * table that executor connections can see.
-    */
-  override def createSharedStagingSql(staging: String, dest: String): String =
-    s"CREATE UNLOGGED TABLE $staging (LIKE $dest INCLUDING DEFAULTS)"
 
   override def upsertSql(dest: String, staging: String, cols: Seq[String],
       pk: String, isDeleted: Option[String]): String = {

@@ -1,22 +1,21 @@
 package graft.sync
 
 import java.sql.{Connection, Timestamp}
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import graft.operators.MergeOps
-import graft.sink.SqlDialect
+import graft.sink.{SqlDialect, TableLoad}
 
 /** The steady-state CDC transaction (C1, `query_poll_table.py:155-204`;
   * SURVEY.md §3.2): CAS lock → watermark-filtered delta → within-batch
   * dedup (J4) → stage → merge J1 + delete J2 → watermark advance A2 →
   * single commit; exception path resets the lock and re-raises.
   *
-  * Scale split, same as the reference: the delta LOAD into staging may
-  * be parallel (per-partition JDBC inserts from executors), but the
-  * MERGE is one serial transaction on a driver-held connection — merge
-  * + watermark + state update are atomic, which is the no-lost-updates
-  * invariant (`query_poll_table.py:198`, SURVEY §7.4). A crash between
-  * load and watermark update re-fetches from the old watermark and the
+  * Same as the reference, the delta streams into staging through the
+  * driver connection ([[graft.sink.TableLoad.load]]) and the MERGE runs
+  * in the same serial transaction — load + merge + watermark + state
+  * update are atomic, which is the no-lost-updates invariant
+  * (`query_poll_table.py:198`, SURVEY §7.4). A crash between load and
+  * watermark update re-fetches from the old watermark and the
   * idempotent merge absorbs the overlap.
   */
 final case class SyncConfig(
@@ -24,8 +23,7 @@ final case class SyncConfig(
     pk: String,
     tsCol: String,
     isDeletedCol: Option[String] = None,
-    schema: Option[String] = None,
-    parallelStaging: Boolean = false)
+    schema: Option[String] = None)
 
 sealed trait SyncResult
 object SyncResult {
@@ -42,7 +40,7 @@ object SyncResult {
 }
 
 final class IncrementalSync(conn: Connection, dialect: SqlDialect,
-    state: SyncStateStore, jdbcUrl: Option[String] = None) {
+    state: SyncStateStore) {
 
   /** One sync round for one table. `fetchDelta(watermark)` returns the
     * strictly-greater-than delta including soft-deleted rows (F2
@@ -61,11 +59,6 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
       fetchDelta: Option[Timestamp] => DataFrame,
       countDelta: Option[Option[Timestamp] => Long] = None,
       maxDeltaRows: Long = Long.MaxValue): SyncResult = {
-    if (cfg.parallelStaging && !dialect.supportsParallelStaging)
-      throw new IllegalArgumentException(
-        s"dialect ${dialect.getClass.getSimpleName} cannot create a " +
-          "cross-session visible staging table; parallelStaging would " +
-          "fail on every executor insert — use serial staging")
     if (!state.tryLock(cfg.tablename)) return SyncResult.LockBusy
     try {
       val watermark = state.get(cfg.tablename).flatMap(_.syncuntil)
@@ -110,93 +103,25 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
   private def stageAndMerge(cfg: SyncConfig, delta: DataFrame): Long = {
     val staging = dialect.quoteIdent(s"__stg_${cfg.tablename}")
     val dest = destName(cfg)
-    val cols = delta.columns.toSeq
-    val stagingDdl =
-      if (cfg.parallelStaging) dialect.createSharedStagingSql(staging, dest)
-      else dialect.createStagingSql(staging, dest)
-    try exec(stagingDdl)
+    try exec(dialect.createStagingSql(staging, dest))
     catch {
-      // leftover staging from a crashed parallel round: reuse, emptied
+      // leftover staging from a crashed round: reuse, emptied
       // (X0Y32 = Derby duplicate object, 42P07 = PG duplicate_table)
       case e: java.sql.SQLException
           if e.getSQLState == "X0Y32" || e.getSQLState == "42P07" =>
         exec(dialect.truncateSql(staging))
     }
-    // parallel staging inserts from other connections: they must SEE
-    // the staging table, so its creation commits eagerly (the merge +
-    // watermark transaction below is unaffected)
-    if (cfg.parallelStaging) conn.commit()
     try {
-      val insert = s"INSERT INTO $staging (${cols.map(dialect.quoteIdent).mkString(", ")})" +
-        s" VALUES (${cols.map(_ => "?").mkString(", ")})"
-      val n =
-        if (cfg.parallelStaging) stageFromExecutors(delta, insert, cols.size)
-        // FORCE_NULL only for non-string nullable columns — see the
-        // matching comment in BulkLoad.insertRows (string '' under COPY
-        // must not silently become NULL and diverge from the INSERT path)
-        else dialect.copyInSql(staging, cols,
-            delta.schema.fields.filter(f => f.nullable &&
-              f.dataType != org.apache.spark.sql.types.StringType).map(_.name).toSeq)
-          .flatMap(sql => graft.sink.CopyStager.copyInto(conn, sql, delta))
-          .getOrElse {
-          val ps = conn.prepareStatement(insert)
-          try {
-            var count = 0L
-            // the deduped delta is small (bounded by poll cadence); rows
-            // stream through the driver exactly like the reference's COPY
-            delta.toLocalIterator().forEachRemaining { row: Row =>
-              cols.indices.foreach(i => ps.setObject(i + 1, row.get(i)))
-              ps.addBatch()
-              count += 1
-              if (count % 1000 == 0) ps.executeBatch()
-            }
-            ps.executeBatch()
-            count
-          } finally ps.close()
-        }
+      val n = TableLoad.load(conn, dialect, staging, delta)
       // IsDeleted is an ordinary synced column in the dest table, as
       // in the reference; the insert path filters it, the delete path
       // consumes it (`query_poll_table.py:112,134`)
-      exec(dialect.upsertSql(dest, staging, cols, cfg.pk, cfg.isDeletedCol))
+      exec(dialect.upsertSql(dest, staging, delta.columns.toSeq, cfg.pk,
+        cfg.isDeletedCol))
       cfg.isDeletedCol.foreach(fl =>
         exec(dialect.deleteSql(dest, staging, cfg.pk, fl)))
       n
     } finally exec(dialect.dropSql(staging))
-  }
-
-  /** Parallel staging for large deltas (SURVEY §7.4: the LOAD may be
-    * parallel, the MERGE stays one driver transaction): every partition
-    * opens its own connection and batch-inserts its rows. Requires a
-    * shared-visibility staging table (non-temp) and a thread-safe URL —
-    * both true for server databases and for embedded Derby in-JVM.
-    */
-  private def stageFromExecutors(delta: DataFrame, insertSql: String,
-      width: Int): Long = {
-    val url = jdbcUrl.getOrElse(throw new IllegalStateException(
-      "parallelStaging requires SyncConfig.jdbcUrl"))
-    val counter = delta.sparkSession.sparkContext.longAccumulator("staged")
-    delta.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val c = java.sql.DriverManager.getConnection(url)
-        try {
-          c.setAutoCommit(false)
-          val ps = c.prepareStatement(insertSql)
-          try {
-            var k = 0L
-            rows.foreach { row =>
-              (0 until width).foreach(i => ps.setObject(i + 1, row.get(i)))
-              ps.addBatch()
-              k += 1
-              if (k % 1000 == 0) ps.executeBatch()
-            }
-            ps.executeBatch()
-            c.commit()
-            counter.add(k)
-          } finally ps.close()
-        } finally c.close()
-      }
-    }
-    counter.value
   }
 
   private def maxLandedTs(cfg: SyncConfig): Option[Timestamp] = {
@@ -208,8 +133,5 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
     } finally stmt.close()
   }
 
-  private def exec(sql: String): Unit = {
-    val stmt = conn.createStatement()
-    try stmt.execute(sql) finally stmt.close()
-  }
+  private def exec(sql: String): Unit = TableLoad.exec(conn, sql)
 }

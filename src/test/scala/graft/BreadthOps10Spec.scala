@@ -204,12 +204,14 @@ class BreadthOps10Spec extends SparkSpec {
 
   test("bfsBall: path graph balls grow by one hop per radius") {
     import graft.operators.GraphOps
-    // path 0-1-2-3-4-5: seed 0 (0 % 997 == 0) reaches 1 / 2 / 3 nodes
-    val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-      .toDF("doc_a", "doc_b")
-    val out = GraphOps.bfsBall(pairs)
-      .as[(Long, Long, Long, Long, Double)].collect().toSeq
-    assert(out == Seq((0L, 1L, 2L, 3L, 3.0)), out)
+    // path 0-1-2-3-4-5: seed 0 (0 % 997 == 0) reaches 1 / 2 / 3 nodes;
+    // a (0, 0) self-loop pair must not count the seed in its own ball
+    val path = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
+    Seq(path, (0L, 0L) +: path).foreach { pairs =>
+      val out = GraphOps.bfsBall(pairs.toDF("doc_a", "doc_b"))
+        .as[(Long, Long, Long, Long, Double)].collect().toSeq
+      assert(out == Seq((0L, 1L, 2L, 3L, 3.0)), (pairs, out))
+    }
   }
 
   test("pqCodeUtil: a collapsed subspace reports ~1 effective code") {

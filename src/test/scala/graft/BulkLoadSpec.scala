@@ -1,10 +1,13 @@
 package graft
 
 import java.sql.{Connection, DriverManager, Timestamp}
+import java.time.LocalDateTime
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.TimestampNTZType
 import org.scalatest.BeforeAndAfterAll
 import graft.sink.DerbyDialect
 import graft.sources.salesforce.{BatchInfo, JobInfo}
-import graft.sync.{BulkLoad, SyncConfig, SyncStateStore}
+import graft.sync.{BulkLoad, IncrementalSync, SyncConfig, SyncResult, SyncStateStore}
 
 /** Assembled K2 truncate-and-load + C4 bootstrap against embedded
   * Derby: Completed-only batch filter, empty-job and failed-batch
@@ -98,7 +101,7 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
     // empty string vs NULL: FORCE_NULL on a string column would load
     // quoted '' as NULL under COPY while the INSERT fallback stores ''
     // — the two load paths must agree, so strings are excluded
-    var recorded: Option[(Seq[String], Seq[String])] = None
+    var recorded = Seq.empty[(Seq[String], Seq[String])]
     val inner = new DerbyDialect
     val recording = new graft.sink.SqlDialect {
       override def quoteIdent(n: String) = inner.quoteIdent(n)
@@ -111,12 +114,13 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
       override def truncateSql(t: String) = inner.truncateSql(t)
       override def copyInSql(dest: String, cols: Seq[String],
           forceNullCols: Seq[String]) = {
-        recorded = Some((cols, forceNullCols))
+        recorded :+= ((cols, forceNullCols))
         None // no COPY protocol here: falls back to batched INSERTs
       }
     }
     val st = conn.createStatement()
-    st.execute("""CREATE TABLE "k2fn" ("pk" BIGINT, "name" VARCHAR(80), "amount" DOUBLE)""")
+    st.execute("""CREATE TABLE "k2fn" ("pk" BIGINT, "name" VARCHAR(80), "amount" DOUBLE,
+      |  "modstamp" TIMESTAMP)""".stripMargin)
     st.close()
     val df = Seq((1L, Option("a"), Option(2.5)), (2L, None: Option[String], None: Option[Double]))
       .toDF("pk", "name", "amount")
@@ -125,8 +129,42 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
     val n = BulkLoad.bulkLoad(job, SyncConfig("k2fn", "pk", "modstamp"),
       conn, recording, state, _ => df)
     assert(n == 2)
+    // a sync round's staging load goes through the same loader (the
+    // non-nullable modstamp literal is not force-nulled either)
+    val r = new IncrementalSync(conn, recording, state).syncTable(
+      SyncConfig("k2fn", "pk", "modstamp"), _ => df.withColumn("modstamp", lit(Modstamp)))
+    assert(r == SyncResult.Merged(2, Modstamp))
     // nullable string 'name' must NOT be force-nulled; nullable double must
-    assert(recorded == Some((Seq("pk", "name", "amount"), Seq("amount"))))
+    assert(recorded == Seq(
+      (Seq("pk", "name", "amount"), Seq("amount")),
+      (Seq("pk", "name", "amount", "modstamp"), Seq("amount"))))
+  }
+
+  test("timestamp_ntz columns load into Derby through bulk load and sync staging") {
+    // Spark hands timestamp_ntz values over as LocalDateTime, which
+    // Derby's setObject rejects (SQLState 22005)
+    val st = conn.createStatement()
+    st.execute("""CREATE TABLE "k2ntz" ("pk" BIGINT, "at" TIMESTAMP)""")
+    st.close()
+    def ntz(pk: Long, at: String) =
+      Seq((pk, LocalDateTime.parse(at))).toDF("pk", "at")
+    assert(ntz(1L, "2024-03-02T10:15:30").schema("at").dataType == TimestampNTZType)
+    val ntzCfg = SyncConfig("k2ntz", "pk", "at")
+    val job = JobInfo("750T", Seq(BatchInfo("b1", "Completed", 1)),
+      numberRecordsProcessed = 1, systemModstamp = Some(Modstamp))
+    assert(BulkLoad.bulkLoad(job, ntzCfg, conn, dialect, state,
+      _ => ntz(1L, "2024-03-02T10:15:30")) == 1)
+    val r = new IncrementalSync(conn, dialect, state).syncTable(ntzCfg,
+      _ => ntz(2L, "2024-03-02T11:15:30"))
+    assert(r == SyncResult.Merged(1, ts("2024-03-02 11:15:30")))
+    val q = conn.createStatement()
+    try {
+      val rs = q.executeQuery("""SELECT "pk", "at" FROM "k2ntz" ORDER BY "pk"""")
+      val out = Seq.newBuilder[(Long, Timestamp)]
+      while (rs.next()) out += ((rs.getLong(1), rs.getTimestamp(2)))
+      assert(out.result() == Seq(
+        1L -> ts("2024-03-02 10:15:30"), 2L -> ts("2024-03-02 11:15:30")))
+    } finally q.close()
   }
 
   test("mid-load failure rolls back truncate, load, and registration") {

@@ -378,6 +378,19 @@ class GraphOpsSpec extends SparkSpec {
     assert(a == b, s"merge-agg diverged:\n$a\nvs\n$b")
   }
 
+  test("top_k_merge_agg rejects sketch arrays that may hold null elements") {
+    import graft.functions.GraftFunctions.top_k_merge_agg
+    import org.apache.spark.sql.functions.{array, col, lit, struct, when}
+    val elem = struct(lit(1.0).as("score"), lit(7L).as("id"))
+    // when() without otherwise yields a null element: containsNull = true
+    val sketches = Seq(1L).toDF("g")
+      .select(col("g"), array(elem, when(lit(false), elem)).as("sk"))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      sketches.groupBy("g").agg(top_k_merge_agg(col("sk"), 2)).collect()
+    }
+    assert(e.getMessage.contains("without null elements"), e.getMessage)
+  }
+
   test("clusterSizeHistogram counts clusters per member count") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val got = GraphOps.clusterSizeHistogram(pairs)

@@ -17,7 +17,7 @@ import graft.types.{SfField, SfSchema}
   * the SAME statements the engine generates — [[SfSchema]] DDL,
   * [[PgDialect]] `ON CONFLICT` merge, anti-delete,
   * `COPY … FORCE_NULL` (fed over stdin exactly as CopyManager would),
-  * UNLOGGED shared staging, TRUNCATE, MAX(ts) — through `psql`, and
+  * TRUNCATE, MAX(ts) — through `psql`, and
   * asserts their row-level effects, not just their text. Every test
   * skips cleanly (`assume`) when the binaries or the `postgres` user
   * are unavailable.
@@ -153,11 +153,9 @@ class LivePgLocalSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(psql("""SELECT count(*) FROM contacts WHERE "Amount" IS NULL""") == "1")
   }
 
-  test("UNLOGGED shared staging, TRUNCATE and MAX(ts) goldens execute") {
+  test("TRUNCATE and MAX(ts) goldens execute") {
     live()
     psql("""CREATE TABLE base ("Id" TEXT, "SystemModstamp" TIMESTAMPTZ)""")
-    psql(d.createSharedStagingSql("stage1", "base"))
-    assert(psql("SELECT relpersistence FROM pg_class WHERE relname = 'stage1'") == "u")
     psql("""INSERT INTO base VALUES ('1', '2024-03-01T08:00:00Z')""")
     assert(psql(d.maxTsSql("base", "SystemModstamp")).nonEmpty)
     psql(d.truncateSql("base"))

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.{Connection, DriverManager, Timestamp}
 
-import graft.sink.{CopyStager, PgDialect}
+import graft.sink.{PgDialect, TableLoad}
 import graft.sync.{IncrementalSync, SyncConfig, SyncResult, SyncStateStore}
 
 /** LIVE PostgreSQL integration — env-gated by `PGSF_TEST_URL`.
@@ -87,7 +87,7 @@ class LivePgSpec extends SparkSpec {
         .toDF("Id", "Name", "Amount")
       val sql = d.copyInSql(dest, Seq("Id", "Name", "Amount"), Seq("Amount"))
         .getOrElse(fail("PgDialect must produce COPY sql"))
-      val copied = CopyStager.copyInto(conn, sql, df)
+      val copied = TableLoad.copyInto(conn, sql, df)
       assume(copied.isDefined,
         "postgresql JDBC driver not on classpath — COPY path skipped")
       assert(copied.contains(2L))

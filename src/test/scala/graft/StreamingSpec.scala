@@ -372,4 +372,13 @@ class StreamingSpec extends SparkSpec {
     assert(topk.count() == fileShaped.count(),
       "directory-shaped sentinel replay must match the file-shaped one")
   }
+
+  test("SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer") {
+    assert(SparkEntry.streamShuffle(None) == 2)
+    assert(SparkEntry.streamShuffle(Some("4")) == 4)
+    Seq("0", "-3", "two", "").foreach { bad =>
+      val e = intercept[IllegalArgumentException](SparkEntry.streamShuffle(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_STREAM_SHUFFLE"), e.getMessage)
+    }
+  }
 }

@@ -102,7 +102,7 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   test("COPY stager: pgsf CSV payload streams correctly; no-PG falls back") {
     val df = Seq((1L, Option("a\"b"), Option(true)), (2L, None, None))
       .toDF("pk", "name", "flag")
-    val reader = graft.sink.CopyStager.csvReader(df)
+    val reader = graft.sink.TableLoad.csvReader(df)
     val text = {
       val sb = new StringBuilder; val buf = new Array[Char](7)
       var n = reader.read(buf, 0, buf.length)
@@ -114,7 +114,7 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
       "\"pk\",\"name\",\"flag\"\n1,\"a\"\"b\",t\n2,,\n")
     // this build has no PostgreSQL driver: the reflective seam reports
     // None on a Derby connection and loads take the INSERT path
-    assert(graft.sink.CopyStager.copyInto(conn,
+    assert(graft.sink.TableLoad.copyInto(conn,
       "COPY x FROM STDIN", df).isEmpty)
   }
 
@@ -168,47 +168,6 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
     val due = state.dueTables(now)
     assert(due.contains("t_due"))
     assert(!due.contains("t_fresh"))
-  }
-
-  test("parallel staging: executors insert partitions, merge stays one txn") {
-    // fresh IncrementalSync with the URL so executor tasks can connect
-    val psync = new graft.sync.IncrementalSync(conn, dialect, state,
-      Some("jdbc:derby:memory:syncspec"))
-    val pcfg = cfg.copy(parallelStaging = true)
-    val r = psync.syncTable(pcfg, _ => delta(
-      (20L, "p1", 1.0, "2024-01-05 00:00:00", false),
-      (21L, "p2", 2.0, "2024-01-05 00:00:01", false),
-      (2L, "bob3", 26.0, "2024-01-05 00:00:02", false)).repartition(3))
-    assert(r.isInstanceOf[SyncResult.Merged])
-    val rows = destRows()
-    assert(rows.exists(_ == (20L, "p1", 1.0)))
-    assert(rows.exists(_ == (21L, "p2", 2.0)))
-    assert(rows.exists(_ == (2L, "bob3", 26.0)))
-    assert(state.get("contacts").flatMap(_.syncuntil)
-      .contains(ts("2024-01-05 00:00:02")))
-  }
-
-  test("parallelStaging fails fast when the dialect only stages session-locally") {
-    val tempOnly = new graft.sink.SqlDialect {
-      override def quoteIdent(n: String): String = dialect.quoteIdent(n)
-      override def createStagingSql(s: String, d: String): String =
-        dialect.createStagingSql(s, d)
-      override def upsertSql(dest: String, staging: String, cols: Seq[String],
-          pk: String, isDeleted: Option[String]): String =
-        dialect.upsertSql(dest, staging, cols, pk, isDeleted)
-      override def deleteSql(dest: String, staging: String, pk: String,
-          isDeleted: String): String = dialect.deleteSql(dest, staging, pk, isDeleted)
-      override def supportsParallelStaging: Boolean = false
-    }
-    val s = new graft.sync.IncrementalSync(conn, tempOnly, state,
-      Some("jdbc:derby:memory:syncspec"))
-    val e = intercept[IllegalArgumentException] {
-      s.syncTable(cfg.copy(parallelStaging = true), _ => delta())
-    }
-    assert(e.getMessage.contains("cross-session"))
-    // fail-fast precedes the CAS lock: the table is still lockable
-    assert(state.tryLock("contacts"))
-    conn.rollback() // undo the probe lock
   }
 
   test("delta insert-then-delete of a new PK never survives") {

@@ -167,15 +167,9 @@ class TypesSpec extends AnyFunSuite {
     assert(new graft.sink.DerbyDialect().copyInSql("t", Seq("Id"), Nil).isEmpty)
   }
 
-  test("PG parallel staging uses a cross-session visible UNLOGGED table") {
+  test("PG staging uses the reference's session-local TEMPORARY table") {
     val d = new PgDialect()
-    // serial path keeps the reference's session-local temp table...
     assert(d.createStagingSql("\"tmp\"", "\"dest\"").startsWith("CREATE TEMPORARY TABLE"))
-    // ...but executor connections cannot see a TEMPORARY table, so the
-    // shared variant must be a real (UNLOGGED) table
-    assert(d.createSharedStagingSql("\"tmp\"", "\"dest\"") ==
-      "CREATE UNLOGGED TABLE \"tmp\" (LIKE \"dest\" INCLUDING DEFAULTS)")
-    assert(d.supportsParallelStaging)
   }
 
   test("PG truncate/drop/max-ts golden strings (csv_to_postgres.py:63, synctable.py:45-54)") {
